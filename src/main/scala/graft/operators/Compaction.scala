@@ -1,6 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Small-file compaction — the table-maintenance job every long-lived
   * 100 TB dataset needs: streaming sinks and frequent small batch
@@ -57,10 +62,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * path is only exact on a vacuumed dataset; manifest readers are
   * exact always.
   *
-  * Flat layouts only: a `partitionBy` dataset must be compacted per
-  * partition directory (each leaf dir IS a flat dataset) — compacting
-  * the root would collapse the partition columns into data files and
-  * corrupt partition discovery, so that case is rejected.
+  * Partitioned layouts: each leaf directory of a single-level
+  * `partitionBy` dataset IS a flat dataset with its own manifest and
+  * lease. [[compactParquet]] rejects a partitioned root (flat-compacting
+  * it would collapse the partition column into the data files and
+  * corrupt partition discovery); [[compactPartitioned]] folds every
+  * leaf in one job, then commits each leaf under the same protocol —
+  * so the job count stays constant however many leaves the layout has.
   */
 object Compaction {
   import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -270,35 +278,156 @@ object Compaction {
 
     val subdirs = list(root).filter(Files.isDirectory(_))
     require(subdirs.isEmpty,
-      s"$dir has subdirectories (partitioned layout?) — compact each leaf partition " +
-        s"directory instead; compacting the root would corrupt partition discovery: " +
-        subdirs.map(_.getFileName).mkString(", "))
+      s"$dir has subdirectories (partitioned layout?) — compact it with " +
+        s"compactPartitioned instead; compacting the root would corrupt partition " +
+        s"discovery: " + subdirs.map(_.getFileName).mkString(", "))
 
     val lease = acquireLease(root, leaseStaleMs)
     try {
-      compactLocked(spark, dir, root, targetFileBytes)
+      sweep(root)
+      val live = prepareSwap(root)
+      if (live.isEmpty) (0, 0)
+      else {
+        val runId = newRunId()
+        withStaging(root) { out =>
+          spark.read.schema(footerSchema(spark, live.head)).parquet(live.map(_.toString): _*)
+            .coalesce(fileCount(live, targetFileBytes))
+            .write.mode("overwrite").parquet(out.toString)
+          (live.size, commit(root, parquetFiles(out), runId, live))
+        }
+      }
     } finally {
       Files.deleteIfExists(lease)
       ()
     }
   }
 
-  private def compactLocked(spark: SparkSession, dir: String, root: Path,
-      targetFileBytes: Long): (Int, Int) = {
+  /** Compact a single-level `partitionBy` dataset at `dir` (leaf
+    * directories `<col>=<value>`, each a flat dataset under the
+    * manifest protocol) toward `targetFileBytes` per file, in ONE Spark
+    * job for all leaves. Returns (filesBefore, filesAfter) summed over
+    * the leaves.
+    *
+    * A per-leaf [[compactParquet]] loop pays a rewrite job per leaf, so
+    * maintenance scales with the layout's width (16 leaves at a
+    * 1-hex-char prefix, 65k at 4) rather than with its data. Here the
+    * leaf schema is read once (from the first live file's footer — the
+    * assumption Spark's own multi-file read makes), each leaf's live
+    * files are read with it and coalesced to the file count a flat
+    * compaction would give it, and the leaves are written as one RDD
+    * union by one job: one task per output file, no shuffle, and no
+    * sort. A task holds rows of exactly one leaf, and Spark names its
+    * output `part-<task index>-…`, so the leaf's contiguous range of
+    * union partitions names the files that belong to it. The partition
+    * value never enters the data: the files move back under the leaf
+    * directory they came from, so a digit-only value such as `pfx=00`
+    * stays exactly as it was (a `partitionBy` write would instead sort
+    * every task's rows by the partition column, a sorter page per
+    * task, and re-derive the directory names).
+    *
+    * The commit protocol is the flat one, per leaf: every leaf's lease
+    * is taken before any sweep (a held lease fails the fold fast and
+    * releases the leases already taken); each leaf gets its crash sweep
+    * and vacuum; every leaf's pre-swap manifest is written before any
+    * generation file moves into any leaf; then each leaf's generation
+    * is moved in and its manifest committed atomically. A crash between
+    * two leaf commits leaves every leaf exact for manifest readers —
+    * committed leaves read the new generation, the rest their old live
+    * set — and a re-run converges.
+    */
+  def compactPartitioned(spark: SparkSession, dir: String,
+      targetFileBytes: Long = 128L * 1024 * 1024,
+      leaseStaleMs: Long = 15L * 60 * 1000): (Int, Int) =
+    foldPartitioned(spark, dir, targetFileBytes, leaseStaleMs, _ => ())
 
-    def rmTree(p: Path): Unit = {
-      val w = Files.walk(p)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
+  /** [[compactPartitioned]] with a hook run on each leaf after its
+    * generation files are moved in and before its manifest commit —
+    * where the crash tests inject a failure.
+    */
+  private[graft] def foldPartitioned(spark: SparkSession, dir: String,
+      targetFileBytes: Long, leaseStaleMs: Long,
+      beforeLeafCommit: Path => Unit): (Int, Int) = {
+    require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    // Spark's file index ignores `_`/`.`-prefixed entries, and the flat
+    // per-leaf staging dirs (`.compact-…`) live here too
+    def visibleDirs(p: Path): Seq[Path] = list(p).filter { d =>
+      val n = d.getFileName.toString
+      Files.isDirectory(d) && !n.startsWith(".") && !n.startsWith("_")
+    }
+    val leaves = visibleDirs(root).sortBy(_.getFileName.toString)
+    require(leaves.nonEmpty, s"$dir has no partition directories — use compactParquet")
+    val parts = leaves.map(_.getFileName.toString.split("=", 2))
+    val column = parts.head(0)
+    require(parts.forall(p => p.length == 2 && p(0) == column && p(0).nonEmpty),
+      s"$dir is not a single-column partitioned layout: " +
+        leaves.map(_.getFileName).mkString(", "))
+    leaves.foreach { l =>
+      val nested = visibleDirs(l)
+      require(nested.isEmpty,
+        s"$l has subdirectories — only single-level partitioning is supported: " +
+          nested.map(_.getFileName).mkString(", "))
     }
 
-    // Recovery + retention sweep. (1) staging dirs of THIS dataset
-    // orphaned by a hard crash (scoped by a name hash — never another
-    // dataset's staging); (2) never-committed generation files;
-    // (3) vacuum of the retained previous snapshot (its grace period
-    // ends here: by the next maintenance run, readers of the
-    // pre-commit list have long drained) — so this run compacts one
-    // clean generation.
+    val leases = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try {
+      leaves.foreach(l => leases += acquireLease(l, leaseStaleMs))
+      sweepStaging(root)
+      leaves.foreach(sweep)
+      // every leaf's pre-swap manifest lands here, before any move
+      val work = leaves.map(l => l -> prepareSwap(l)).filter(_._2.nonEmpty)
+      if (work.isEmpty) (0, 0)
+      else {
+        val schema = footerSchema(spark, work.head._2.head)
+        val runId = newRunId()
+        withStaging(root) { out =>
+          // Each leaf is planned alone and the leaves meet as RDDs: its
+          // codegen'd scan then compiles once for all leaves (a DataFrame
+          // union gives every child its own codegen stage id, so its own
+          // compile), and a DataFrame union of coalesce(1) children (all
+          // SinglePartition) would be zipped into ONE task.
+          val leafRows = work.map { case (_, live) =>
+            spark.read.schema(schema).parquet(live.map(_.toString): _*)
+              .coalesce(fileCount(live, targetFileBytes)).rdd
+          }
+          spark.createDataFrame(spark.sparkContext.union(leafRows), schema)
+            .write.mode("overwrite").parquet(out.toString)
+          // union partitions [starts(k), starts(k + 1)) are leaf k's
+          val starts = leafRows.scanLeft(0)(_ + _.getNumPartitions)
+          val staged = parquetFiles(out).groupBy { f =>
+            f.getFileName.toString match {
+              case PartFile(task) => starts.lastIndexWhere(_ <= task.toInt)
+              case n => throw new IllegalStateException(
+                s"unexpected output file $n: no task index to map it to its leaf")
+            }
+          }
+          // Spark always writes a file from task 0, so an all-empty
+          // leaf 0 may get one empty file; any other empty leaf gets none
+          val after = work.zipWithIndex.map { case ((leaf, live), k) =>
+            commit(leaf, staged.getOrElse(k, Nil), runId, live, beforeLeafCommit)
+          }
+          (work.map(_._2.size).sum, after.sum)
+        }
+      }
+    } finally {
+      leases.foreach(Files.deleteIfExists)
+    }
+  }
+
+  /** Spark's name for a task's output file: `part-<task index>-<job>…`. */
+  private val PartFile = """part-(\d+)-.*""".r
+
+  private def rmTree(p: Path): Unit = {
+    val w = Files.walk(p)
+    try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    finally w.close()
+  }
+
+  /** Staging dirs of the dataset at `root` orphaned by a hard crash —
+    * scoped by a name hash, never another dataset's staging — plus the
+    * legacy raw-name ones.
+    */
+  private def sweepStaging(root: Path): Unit = {
     list(root.getParent)
       .filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith(stagingPrefix(root)))
@@ -313,6 +442,17 @@ object Compaction {
     list(root.getParent)
       .filter(p => Files.isDirectory(p) && legacy.matches(p.getFileName.toString))
       .foreach(rmTree)
+  }
+
+  /** Recovery + retention sweep of a flat dataset, run under its lease.
+    * (1) orphaned staging dirs; (2) never-committed generation files;
+    * (3) vacuum of the retained previous snapshot (its grace period
+    * ends here: by the next maintenance run, readers of the pre-commit
+    * list have long drained) — so the run compacts one clean
+    * generation.
+    */
+  private def sweep(root: Path): Unit = {
+    sweepStaging(root)
     readManifest(root).foreach { m =>
       val committed = m.live.toSet
       parquetFiles(root)
@@ -322,47 +462,74 @@ object Compaction {
         }
         .foreach(gc(root, _))
     }
-    vacuum(dir)
+    vacuum(root.toString)
+    ()
+  }
 
+  /** The live set a swap will consume. Makes sure a manifest exists
+    * BEFORE any swap step: every crash window after this point is then
+    * recoverable by [[sweep]].
+    */
+  private def prepareSwap(root: Path): Seq[Path] = {
     val manifest = readManifest(root)
     val live = liveFiles(root, manifest)
-    if (live.isEmpty) return (0, 0)
-
-    // Make sure a manifest exists BEFORE any swap step: every crash
-    // window after this point is then recoverable by the sweep above.
-    if (manifest.isEmpty)
+    if (live.nonEmpty && manifest.isEmpty)
       writeManifest(root, Manifest(live.map(_.getFileName.toString), Nil))
+    live
+  }
 
-    val totalBytes = live.map(Files.size).sum
-    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+  /** The Spark schema of the parquet file `f`, read from its footer on
+    * the driver — what Spark's schema inference reads too, without the
+    * job it launches. Files without Spark's schema entry (other
+    * writers) fall back to that inference.
+    */
+  private def footerSchema(spark: SparkSession, f: Path): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new HadoopPath(f.toUri), spark.sparkContext.hadoopConfiguration))
+    val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData finally reader.close()
+    Option(meta.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(spark.read.parquet(f.toString).schema)
+  }
 
-    val runId = java.util.UUID.randomUUID().toString.take(8)
+  /** Files a flat compaction writes for `live`: one per
+    * `targetFileBytes` of input, at least one.
+    */
+  private def fileCount(live: Seq[Path], targetFileBytes: Long): Int =
+    math.max(1, math.ceil(live.map(Files.size).sum.toDouble / targetFileBytes).toInt)
+
+  private def newRunId(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** Run `body` with a fresh staging output path for `root`'s run. */
+  private def withStaging[T](root: Path)(body: Path => T): T = {
     val staging = Files.createTempDirectory(root.getParent, stagingPrefix(root))
-    try {
-      val stagingOut = staging.resolve("out")
-      spark.read.parquet(live.map(_.toString): _*).coalesce(targetFiles)
-        .write.mode("overwrite").parquet(stagingOut.toString)
+    // staging is scratch in every outcome — success (files already
+    // moved out) or failure (half-written output) — so reclaim it
+    // unconditionally; the manifest keeps the dataset consistent.
+    try body(staging.resolve("out")) finally rmTree(staging)
+  }
 
-      // move the new generation in under the generation prefix —
-      // invisible to manifest readers until the commit …
-      val genNames = parquetFiles(stagingOut).map { f =>
-        val name = s"$GenPrefix$runId-${f.getFileName.toString}"
-        Files.move(f, root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-        name
-      }
-      // … COMMIT: one atomic rename flips readers old → new. The old
-      // inputs travel as the consumed list and STAY on disk (snapshot
-      // retention) — readers that resolved the pre-commit list still
-      // find every file; the retained snapshot is reclaimed by the
-      // next run's sweep or an explicit vacuum().
-      writeManifest(root, Manifest(genNames, live.map(_.getFileName.toString)))
-      (live.size, genNames.size)
-    } finally {
-      // staging is scratch in every outcome — success (files already
-      // moved out) or failure (half-written output) — so reclaim it
-      // unconditionally; the manifest keeps the dataset consistent.
-      rmTree(staging)
+  /** Move the generation's `staged` files into `root` and commit them
+    * as the successor of `live`. Returns the generation's file count.
+    */
+  private def commit(root: Path, staged: Seq[Path], runId: String, live: Seq[Path],
+      beforeCommit: Path => Unit = _ => ()): Int = {
+    // move the new generation in under the generation prefix —
+    // invisible to manifest readers until the commit …
+    val genNames = staged.map { f =>
+      val name = s"$GenPrefix$runId-${f.getFileName.toString}"
+      Files.move(f, root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      name
     }
+    beforeCommit(root)
+    // … COMMIT: one atomic rename flips readers old → new. The old
+    // inputs travel as the consumed list and STAY on disk (snapshot
+    // retention) — readers that resolved the pre-commit list still
+    // find every file; the retained snapshot is reclaimed by the next
+    // run's sweep or an explicit vacuum().
+    writeManifest(root, Manifest(genNames, live.map(_.getFileName.toString)))
+    genNames.size
   }
 
   /** Staging dirs are scoped per dataset so the crash sweep can never

@@ -54,7 +54,8 @@ import graft.operators.Compaction
   * directory rename, so a torn bootstrap is invisible), then
   * maintained by the same idempotent single-file-per-batch append as
   * the store itself. Like the store, an index directory accretes one
-  * file per batch and can be folded by [[Compaction.compactParquet]];
+  * file per batch (per touched leaf for the fp index) and is folded by
+  * [[Compaction.compactParquet]] ([[Compaction.compactPartitioned]]);
   * the read path is manifest-aware (and the df partials are
   * compaction-safe by construction — compaction preserves the row
   * multiset and df is derived by summation, never by row identity).
@@ -153,7 +154,10 @@ object NearDupIngest {
     *   - the shingle/df probes are DELTA-DENSE (a batch of B docs
     *     probes ~B × shingles-per-doc digests — at any plausible P
     *     nearly every partition is touched, so pruning buys ~nothing
-    *     while multiplying the per-batch small-file accretion by P);
+    *     while each batch would land up to P small files instead of
+    *     one; [[Compaction.compactPartitioned]] folds them in one job
+    *     at any P, but the files, their opens and their footers still
+    *     scale with P between maintenance runs);
     *   - the passage probe's delta side is behind the production
     *     `localCheckpoint` pin, which erases the selective predicate
     *     DPP's planner precondition looks for — the pruning would
@@ -599,7 +603,11 @@ object NearDupIngest {
           java.nio.file.Files.move(p.toPath, target,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          spark.read.parquet(target.toString).count()
+          // the footer's row count is exact and costs no Spark job
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(target.toUri), spark.sparkContext.hadoopConfiguration)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try reader.getRecordCount finally reader.close()
         case None =>
           java.nio.file.Files.deleteIfExists(target)
           0L
@@ -657,15 +665,16 @@ object NearDupIngest {
     * Discovery is by the directory-name contract (`<store>.fpidx-p*`,
     * `.shidx-k*`, `.pgidx-c*`, `.dfidx-k*`, `.cntidx-k*`), so a
     * maintenance job needs no knowledge of which k/c configs ran.
-    * Safe concurrently with the stream: each directory's compaction is
-    * independently atomic under the manifest+lease protocol, the
-    * admission reads each dir through [[readIdx]] (manifest-aware),
-    * and the df partials are aggregation-derived (sum), so folding
-    * their files never changes a probe result —
-    * `NearDupIngestSpec` pins admission exactness across it.
+    * The directories are folded concurrently, one thread each.
+    * Safe concurrently with the stream: each directory's (each fp
+    * leaf's) commit is independently atomic under the manifest+lease
+    * protocol, the admission reads each dir through [[readIdx]] /
+    * [[readPartIdx]] (manifest-aware), and the df partials are
+    * aggregation-derived (sum), so folding their files never changes
+    * a probe result — `NearDupIngestSpec` pins admission exactness
+    * across it.
     */
   def compactStoreAndIndexes(spark: SparkSession, storeDir: String): Unit = {
-    Compaction.compactParquet(spark, storeDir)
     val store = Paths.get(storeDir)
     val name = store.getFileName.toString
     // Exact suffix grammar, not a bare startsWith: a crashed
@@ -685,17 +694,32 @@ object NearDupIngest {
         .filter(f => f.isDirectory && ours(f.getName))
         .map(_.getAbsolutePath).toSeq.sorted
     }.getOrElse(Seq.empty)
-    // a pfx-partitioned index is compacted per LEAF — each `pfx=…`
-    // directory is an independently-atomic flat dataset (compacting
-    // the root would collapse the partition column into the data
-    // files and corrupt partition discovery; Compaction rejects it)
-    siblings.foreach { s =>
-      val leaves = Option(new java.io.File(s).listFiles())
+    // a pfx-partitioned index folds all its `pfx=…` leaves in one job,
+    // each leaf committing under its own manifest (flat-compacting the
+    // root would collapse the partition column into the data files;
+    // Compaction rejects it)
+    def compact(dir: String): Unit = {
+      val partitioned = Option(new java.io.File(dir).listFiles())
         .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("pfx="))
-      if (leaves.nonEmpty) leaves.sortBy(_.getName)
-        .foreach(l => Compaction.compactParquet(spark, l.getAbsolutePath))
-      else Compaction.compactParquet(spark, s)
+        .exists(f => f.isDirectory && f.getName.startsWith("pfx="))
+      if (partitioned) Compaction.compactPartitioned(spark, dir)
+      else Compaction.compactParquet(spark, dir)
+      ()
+    }
+    // The datasets are independent — each has its own lease, manifest
+    // and hash-scoped staging — and each fold is one small job whose
+    // cost is mostly driver-side planning and commit, so they run
+    // concurrently. Every fold finishes or fails on its own; the first
+    // failure is rethrown once all have ended.
+    val datasets = storeDir +: siblings
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(datasets.size)
+    try {
+      datasets.map(d => pool.submit[Unit](() => compact(d)))
+        .map(f => scala.util.Try(f.get()))
+        .collectFirst { case scala.util.Failure(e) => throw Option(e.getCause).getOrElse(e) }
+      ()
+    } finally {
+      pool.shutdown()
     }
   }
 

@@ -258,4 +258,178 @@ class CompactionSpec extends SparkSpec {
     assert(Files.exists(siblingStaging.resolve("half-written")),
       "t's sweep must not reclaim t-x's in-flight staging")
   }
+
+  // ---------------------------------------------------------------
+  // compactPartitioned: one fold for every leaf of a pfx= layout
+  // ---------------------------------------------------------------
+
+  private val partSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, fp STRING, pfx STRING")
+
+  /** A fingerprint-index-shaped dataset: (doc_id, fp) partitioned by
+    * `pfx`, the first hex char of fp (16 leaves); round-robin
+    * repartitioning gives every leaf `filesPerLeaf` small files.
+    */
+  private def mkPartIdx(docs: Int, filesPerLeaf: Int): String = {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graftfold").resolve("t.fpidx-p1").toString
+    spark.range(docs).select(col("id").as("doc_id"), md5(col("id").cast("string")).as("fp"))
+      .withColumn("pfx", substring(col("fp"), 1, 1))
+      .orderBy("pfx", "doc_id").repartition(filesPerLeaf)
+      .write.partitionBy("pfx").parquet(dir)
+    dir
+  }
+  private def leafDirs(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(f => f.isDirectory && f.getName.startsWith("pfx="))
+      .sortBy(_.getName).toSeq
+  /** Per leaf, its rows as read through the manifest protocol. */
+  private def leafRows(dir: String): Map[String, Seq[String]] =
+    leafDirs(dir).map { l =>
+      l.getName -> spark.read.parquet(Compaction.livePaths(l.getPath): _*)
+        .collect().map(_.toString).toSeq.sorted
+    }.toMap
+  /** The whole index as the ingest reads it: every leaf's live files
+    * under one basePath, with an explicit string-typed partition column.
+    */
+  private def indexRows(dir: String): Seq[String] =
+    spark.read.option("basePath", dir).schema(partSchema)
+      .parquet(leafDirs(dir).flatMap(l => Compaction.livePaths(l.getPath)): _*)
+      .collect().map(_.toString).toSeq.sorted
+  private def parquetNames(leaf: java.io.File): Seq[String] =
+    leaf.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq.sorted
+  private def leafBytes(leaf: java.io.File): Long =
+    Compaction.livePaths(leaf.getPath).map(p => Files.size(Paths.get(p))).sum
+
+  test("compactPartitioned keeps every leaf's rows and gives it ceil(leafBytes / target) files") {
+    val dir = mkPartIdx(1600, 6)
+    val leaves = leafDirs(dir)
+    assert(leaves.size == 16)
+    val before = leafRows(dir)
+    val whole = indexRows(dir)
+    val inputs = leaves.map(parquetNames(_).size)
+    val target = leaves.map(leafBytes).sum / leaves.size * 2 / 5
+    val expected = leaves.map(l => math.ceil(leafBytes(l).toDouble / target).toInt)
+    assert(expected.forall(_ >= 2) && expected.zip(inputs).forall { case (e, n) => e < n },
+      s"precondition: every leaf must fold several files into several: $expected of $inputs")
+
+    val (b, a) = Compaction.compactPartitioned(spark, dir, targetFileBytes = target)
+    assert(b == inputs.sum && a == expected.sum, s"got ($b, $a)")
+    assert(leafRows(dir) == before, "a leaf's row multiset changed")
+    assert(indexRows(dir) == whole)
+    leaves.zip(expected).foreach { case (l, e) =>
+      val live = Compaction.livePaths(l.getPath)
+      assert(live.size == e, s"${l.getName}: ${live.size} files, expected $e")
+      assert(live.forall(p => Paths.get(p).getFileName.toString.startsWith(Compaction.GenPrefix)))
+    }
+    // the retained snapshot vacuums like a flat one, and the plain
+    // partitioned read is then exact too
+    leaves.foreach(l => Compaction.vacuum(l.getPath))
+    assert(spark.read.schema(partSchema).parquet(dir).collect().map(_.toString).toSeq.sorted == whole)
+    assert(stagingDirs(dir).isEmpty && stagingDirs(leaves.head.getPath).isEmpty)
+  }
+
+  test("compactPartitioned round-trips digit-only partition values as strings") {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graftfolddigits").resolve("t").toString
+    spark.range(300).select(col("id").as("doc_id"), md5(col("id").cast("string")).as("fp"),
+        element_at(array(lit("00"), lit("07"), lit("10")), (col("id") % 3 + 1).cast("int")).as("pfx"))
+      .repartition(3).write.partitionBy("pfx").parquet(dir)
+    val whole = indexRows(dir)
+    assert(whole.exists(_.endsWith(",00]")), "precondition: a pfx=00 row reads back as \"00\"")
+
+    Compaction.compactPartitioned(spark, dir)
+    assert(new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
+      .filterNot(_.startsWith(".")).sorted.toSeq == Seq("pfx=00", "pfx=07", "pfx=10"),
+      "the fold must write back into the same leaf directories")
+    assert(indexRows(dir) == whole, "partition values must survive as strings")
+    leafDirs(dir).foreach { l =>
+      val gen = Compaction.livePaths(l.getPath)
+      assert(spark.read.parquet(gen: _*).columns.toSeq == Seq("doc_id", "fp"),
+        "the partition column belongs in the directory name, not the data files")
+    }
+  }
+
+  test("compactPartitioned fails fast on a held leaf lease before sweeping or rewriting any leaf") {
+    val dir = mkPartIdx(800, 3)
+    // a first fold leaves every leaf with a retained snapshot a sweep
+    // would vacuum, so any touched leaf would show in its listing
+    Compaction.compactPartitioned(spark, dir)
+    val leaves = leafDirs(dir)
+    def state: Seq[(String, Seq[String], String)] = leaves.map { l =>
+      (l.getName, l.listFiles().map(_.getName).toSeq.sorted,
+        Files.readString(l.toPath.resolve(Compaction.ManifestName)))
+    }
+    val before = state
+    val held = leaves(9).toPath.resolve(Compaction.LeaseName)
+    Files.writeString(held, "pid=99999 ts=now")
+    val e = intercept[IllegalStateException](Compaction.compactPartitioned(spark, dir))
+    assert(e.getMessage.contains("lease"))
+    assert(Files.exists(held), "a refused fold must not release the other maintainer's lease")
+    Files.delete(held)
+    assert(state == before, "no leaf may be swept, rewritten or left holding a lease")
+    assert(stagingDirs(dir).isEmpty)
+  }
+
+  test("a crash between leaf commits leaves every leaf exact, and a re-run converges") {
+    val dir = mkPartIdx(1600, 4)
+    val before = leafRows(dir)
+    val whole = indexRows(dir)
+    val leaves = leafDirs(dir)
+    // crash on the second leaf: its generation is moved in but its
+    // manifest not yet committed; the first leaf has committed
+    val crash = intercept[RuntimeException] {
+      Compaction.foldPartitioned(spark, dir, 128L * 1024 * 1024, 60000L, leaf =>
+        if (leaf.getFileName.toString == "pfx=1") throw new RuntimeException("crash"))
+    }
+    assert(crash.getMessage == "crash")
+    def gens(l: java.io.File) = parquetNames(l).filter(_.startsWith(Compaction.GenPrefix))
+    assert(Compaction.livePaths(leaves(0).getPath).map(Paths.get(_).getFileName.toString) ==
+      gens(leaves(0)), "the first leaf committed its generation")
+    assert(gens(leaves(1)).nonEmpty, "the second leaf holds an uncommitted generation")
+    assert(leaves.drop(2).forall(l => gens(l).isEmpty &&
+      Files.exists(l.toPath.resolve(Compaction.ManifestName))),
+      "every later leaf has its pre-swap manifest and no generation")
+    assert(spark.read.parquet(leaves(1).getPath).count() > before("pfx=1").size,
+      "precondition: a plain read of the torn leaf double-counts")
+    assert(leafRows(dir) == before, "every leaf must read exactly once after the crash")
+    assert(indexRows(dir) == whole)
+
+    val (_, a) = Compaction.compactPartitioned(spark, dir)
+    assert(a == leaves.size)
+    assert(leafRows(dir) == before && indexRows(dir) == whole)
+    leaves.foreach { l =>
+      Compaction.vacuum(l.getPath)
+      assert(gens(l) == Compaction.livePaths(l.getPath).map(Paths.get(_).getFileName.toString),
+        s"${l.getName}: no crashed generation may survive the re-run")
+    }
+    assert(spark.read.schema(partSchema).parquet(dir).collect().map(_.toString).toSeq.sorted == whole)
+  }
+
+  test("compacting a 16-leaf index runs one Spark job, one task per output file") {
+    val dir = mkPartIdx(1600, 3)
+    assert(leafDirs(dir).size == 16)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        ()
+      }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        ()
+      }
+    }
+    org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Compaction.compactPartitioned(spark, dir)
+      org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // one rewrite job for all leaves; the schema comes from a footer
+    assert(jobs.get() == 1, s"the fold ran ${jobs.get()} jobs")
+    // every leaf folds to one file, each written by its own task — not
+    // all sixteen by one
+    assert(tasks.get() == 16, s"the fold ran ${tasks.get()} tasks")
+  }
 }
